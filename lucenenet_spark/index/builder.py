@@ -62,6 +62,7 @@ from ..analysis import StandardAnalyzer
 from ..scoring.bm25 import BM25
 from ..scoring.smallfloat import doclen_to_norm_byte_fast
 from .config import IndexConfig
+from .postings_codec import flat_list, list_array
 from .snapshot_storage import SnapshotStorage, get_storage
 from .storage import IndexStorage
 
@@ -214,50 +215,40 @@ class IndexBuilder:
             self.docids_dense = True  # rank assignment is dense 0..n-1
         if overwrite:
             self.storage.drop()
-        fp = self._fp()
-        summary = {"fingerprint": fp, "stages": {}}
-
-        def run(stage: str, fn):
-            if self.storage.is_committed(stage, fp):
-                summary["stages"][stage] = {"skipped": True}
-                return
-            import time as _time
-
-            t0 = _time.time()
-            meta = fn()
-            if isinstance(meta, dict):
-                meta["wall_sec"] = round(_time.time() - t0, 3)
-            summary["stages"][stage] = meta
-
+        summary = {"fingerprint": self._fp(), "stages": {}}
         if not self.config.external_docids:
-            run("docoffsets", lambda: self._stage_docoffsets(pages))
-        run("partials", lambda: self._stage_partials(pages))
-        return self._finish(summary, run)
-
-    def _finish(self, summary: dict, run) -> dict:
-        """Stages downstream of the partials table — also the entry point
-        for compaction, which synthesizes a merged partials table first."""
-        run("docmap", self._stage_docmap)
-        run("stats", self._stage_stats)
-        run("postings", self._stage_postings)
-        run("termstats", self._stage_termstats)
-        run("lineage", self._stage_lineage)
-        return summary
+            self._run(summary, "docoffsets", lambda: self._stage_docoffsets(pages))
+        self._run(summary, "partials", lambda: self._stage_partials(pages))
+        return self._finish(summary)
 
     def finish_from_partials(self) -> dict:
         """Run every stage downstream of an externally-written partials
         table (compaction path)."""
-        fp = self._fp()
-        summary = {"fingerprint": fp, "stages": {}}
+        return self._finish({"fingerprint": self._fp(), "stages": {}})
 
-        def run(stage: str, fn):
-            if self.storage.is_committed(stage, fp):
-                summary["stages"][stage] = {"skipped": True}
-                return
-            meta = fn()
-            summary["stages"][stage] = meta
+    def _finish(self, summary: dict) -> dict:
+        """Stages downstream of the partials table — shared by the build
+        and by compaction, which synthesizes a merged partials table first."""
+        self._run(summary, "docmap", self._stage_docmap)
+        self._run(summary, "stats", self._stage_stats)
+        self._run(summary, "postings", self._stage_postings)
+        self._run(summary, "termstats", self._stage_termstats)
+        self._run(summary, "lineage", self._stage_lineage)
+        return summary
 
-        return self._finish(summary, run)
+    def _run(self, summary: dict, stage: str, fn) -> None:
+        """Run one stage unless its commit marker matches the summary's
+        fingerprint (resume); record its meta with the stage wall time."""
+        if self.storage.is_committed(stage, summary["fingerprint"]):
+            summary["stages"][stage] = {"skipped": True}
+            return
+        import time as _time
+
+        t0 = _time.time()
+        meta = fn()
+        if isinstance(meta, dict):
+            meta["wall_sec"] = round(_time.time() - t0, 3)
+        summary["stages"][stage] = meta
 
     # ------------------------------------------------------------------ #
     def _stage_docoffsets(self, pages: DataFrame) -> dict:
@@ -729,7 +720,6 @@ class IndexBuilder:
             and output list columns are rebuilt from offsets — no per-row,
             per-entry, or per-block Python loops."""
             import pyarrow as pa
-            import pyarrow.compute as pc
 
             postings_pa = pa.schema(
                 [
@@ -801,17 +791,17 @@ class IndexBuilder:
                     pa.array(first_docid),
                     pa.array(last_docid),
                     pa.array((block_ends - block_starts).astype(np.int32)),
-                    _list_array(blk_off, deltas),
-                    _list_array(blk_off, freqs.astype(np.int32)),
-                    _list_array(blk_off, norms.astype(np.int32)),
-                    _list_array(blk_off, dlens.astype(np.int32)),
+                    list_array(blk_off, deltas),
+                    list_array(blk_off, freqs.astype(np.int32)),
+                    list_array(blk_off, norms.astype(np.int32)),
+                    list_array(blk_off, dlens.astype(np.int32)),
                 ]
                 if index_positions:
                     # positions are flat in entry order; freq == per-entry
                     # position count, so cumsum(freqs) addresses them
                     entry_pos_off = np.concatenate([[0], np.cumsum(freqs)])
                     pos_off = entry_pos_off[blk_off]
-                    cols.append(_list_array(pos_off, poss.astype(np.int32)))
+                    cols.append(list_array(pos_off, poss.astype(np.int32)))
                 else:
                     cols.append(pa.nulls(len(block_starts), pa.list_(pa.int32())))
                 cols += [
@@ -821,27 +811,18 @@ class IndexBuilder:
                 ]
                 return pa.RecordBatch.from_arrays(cols, schema=postings_pa)
 
-            def flat(rb, name, dtype):
-                col = rb.column(name)
-                vals = pc.list_flatten(col).to_numpy(zero_copy_only=False).astype(dtype)
-                lens = pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)
-                return vals, lens
-
             held = None  # (terms, buckets, row_lens, docids, freqs, norms, dlens, poss, pos_row_lens)
-            empty64 = np.array([], dtype=np.int64)
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
                 terms = rb.column("term").to_numpy(zero_copy_only=False)
                 buckets = rb.column("bucket").to_numpy(zero_copy_only=False).astype(np.int64)
-                docids, row_lens = flat(rb, "docids", np.int64)
-                freqs, _ = flat(rb, "freqs", np.int64)
-                norms, _ = flat(rb, "norm_bytes", np.int64)
-                dlens, _ = flat(rb, "doclens", np.int64)
-                if index_positions:
-                    poss, pos_row_lens = flat(rb, "positions", np.int64)
-                else:
-                    poss, pos_row_lens = empty64, np.zeros(len(terms), dtype=np.int64)
+                docids, row_lens = flat_list(rb.column("docids"))
+                freqs, _ = flat_list(rb.column("freqs"))
+                norms, _ = flat_list(rb.column("norm_bytes"))
+                dlens, _ = flat_list(rb.column("doclens"))
+                # all-null (index_positions=False) flattens to no positions
+                poss, pos_row_lens = flat_list(rb.column("positions"))
                 if held is not None:
                     terms = np.concatenate([held[0], terms])
                     buckets = np.concatenate([held[1], buckets])
@@ -1021,14 +1002,6 @@ def _null_cols(names: list[str]):
     return make
 
 
-def _list_array(offsets: np.ndarray, values, value_type=None):
-    """ListArray from int64 entry offsets + flat values, zero-copy."""
-    import pyarrow as pa
-
-    v = pa.array(values) if not isinstance(values, pa.Array) else values
-    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32), pa.int32()), v)
-
-
 def _invert_codes(
     codes: np.ndarray,
     uniques: np.ndarray,
@@ -1091,17 +1064,17 @@ def _invert_codes(
         pa.nulls(n, pa.int32()),   # norm_byte
         pa.nulls(n, pa.int64()),   # text_bytes
         pa.array(uniques[entry_terms[term_starts]]),
-        _list_array(entry_bounds, entry_docs),
-        _list_array(entry_bounds, entry_freqs.astype(np.int32)),
-        _list_array(entry_bounds, entry_norms.astype(np.int32)),
-        _list_array(entry_bounds, entry_dlens.astype(np.int32)),
+        list_array(entry_bounds, entry_docs),
+        list_array(entry_bounds, entry_freqs.astype(np.int32)),
+        list_array(entry_bounds, entry_norms.astype(np.int32)),
+        list_array(entry_bounds, entry_dlens.astype(np.int32)),
     ]
     if index_positions:
         # flat positions per term: p is sorted by (term, doc, pos), so the
         # token-range slice of a term IS its entry-ordered position stream;
         # per-term offsets into p are the token indices of term boundaries
         tok_bounds = np.append(entry_starts[term_starts], len(t))
-        cols.append(_list_array(tok_bounds, p.astype(np.int32)))
+        cols.append(list_array(tok_bounds, p.astype(np.int32)))
     else:
         cols.append(pa.nulls(n, pa.list_(pa.int32())))
     return pa.RecordBatch.from_arrays(cols, schema=schema)
@@ -1413,7 +1386,6 @@ def _apply_tombstones(partials: DataFrame, tomb: DataFrame, dv_ddl: str = ""):
 
     def strip(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         schema = None
         for rb in batches:
@@ -1424,13 +1396,7 @@ def _apply_tombstones(partials: DataFrame, tomb: DataFrame, dv_ddl: str = ""):
                     list(_partials_pa())
                     + [pa.field(f, rb.schema.field(f).type) for f in dv_names]
                 )
-            dcol = rb.column("docids")
-            lens = (
-                pc.fill_null(pc.list_value_length(dcol), 0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            flat_doc = pc.list_flatten(dcol).to_numpy(zero_copy_only=False).astype(np.int64)
+            flat_doc, lens = flat_list(rb.column("docids"))
             if len(tombs) and len(flat_doc):
                 idx = np.searchsorted(tombs, flat_doc)
                 np.minimum(idx, len(tombs) - 1, out=idx)
@@ -1451,32 +1417,25 @@ def _apply_tombstones(partials: DataFrame, tomb: DataFrame, dv_ddl: str = ""):
             row_keep = new_lens > 0
             rk_arrow = pa.array(row_keep)
 
-            freqs_flat = pc.list_flatten(rb.column("freqs")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            freqs_flat = flat_list(rb.column("freqs"))[0]
             kept_lens = new_lens[row_keep]
             off = np.concatenate([[0], np.cumsum(kept_lens)]).astype(np.int64)
 
             def rebuild(name, dtype):
-                flat = pc.list_flatten(rb.column(name)).to_numpy(
-                    zero_copy_only=False
-                ).astype(dtype)
-                return _list_array(off, pa.array(flat[keep]))
+                return list_array(off, flat_list(rb.column(name))[0][keep].astype(dtype))
 
             pos_col = rb.column("positions")
             if pos_col.null_count == rb.num_rows:
                 new_pos = pa.nulls(int(row_keep.sum()), pa.list_(pa.int32()))
             else:
-                pos_flat = pc.list_flatten(pos_col).to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int32)
+                pos_flat = flat_list(pos_col)[0].astype(np.int32)
                 pos_keep = np.repeat(keep, freqs_flat)
                 pos_lens = np.add.reduceat(freqs_flat * keep, row_starts)
                 pos_lens[lens == 0] = 0
                 pos_off = np.concatenate(
                     [[0], np.cumsum(pos_lens[row_keep])]
                 ).astype(np.int64)
-                new_pos = _list_array(pos_off, pa.array(pos_flat[pos_keep]))
+                new_pos = list_array(pos_off, pos_flat[pos_keep])
 
             cols = [
                 rb.column(n).filter(rk_arrow)

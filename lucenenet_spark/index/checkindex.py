@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from .builder import DOCMAP_SCHEMA, PARTIALS_SCHEMA, POSTINGS_SCHEMA, TERMSTATS_SCHEMA
+from .postings_codec import flat_list
 from .snapshot_storage import get_storage
 
 
@@ -66,7 +67,6 @@ def verify(spark: SparkSession, index_dir: str) -> dict:
     # memory bandwidth, not interpreter speed.
     def check_blocks(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         out_schema = pa.schema(
             [("bad_order", pa.int64()), ("bad_meta", pa.int64()),
@@ -76,15 +76,8 @@ def verify(spark: SparkSession, index_dir: str) -> dict:
             n_blocks = rb.num_rows
             if n_blocks == 0:
                 continue
-            deltas = pc.list_flatten(rb.column("docid_deltas")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            freqs = pc.list_flatten(rb.column("freqs")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            lens = pc.list_value_length(rb.column("docid_deltas")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            deltas, lens = flat_list(rb.column("docid_deltas"))
+            freqs, _ = flat_list(rb.column("freqs"))
             first = rb.column("first_docid").to_numpy(zero_copy_only=False)
             last = rb.column("last_docid").to_numpy(zero_copy_only=False)
             entry_count = rb.column("entry_count").to_numpy(zero_copy_only=False)

@@ -27,15 +27,17 @@ float32 once (DisjunctionSumScorer convention, see scoring/oracle.py).
 from __future__ import annotations
 
 import fnmatch
+import math
 from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.builder import DOCMAP_SCHEMA, POSTINGS_SCHEMA, TERMSTATS_SCHEMA
+from ..index.postings_codec import decode_blocks, flat_list, list_array
 from ..scoring.bm25 import BM25
 from .ast import (
     BooleanQuery,
@@ -159,20 +161,34 @@ def _df_bounded(q: Query) -> bool:
     return False
 
 
-def _decode_tf_dl(pdf: pd.DataFrame):
-    """Posting-block batch -> flat (docids, tf float64, dl float64) — the
-    shared delta-decode for scorers that need (tf, doclen) pairs."""
-    docids = np.concatenate([
-        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-    ])
-    tf = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in pdf["freqs"]]
-    ).astype(np.float64)
-    dl = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-    ).astype(np.float64)
-    return docids, tf, dl
+# stride of the composite (row, position) keys the positional kernels
+# search: > 2 * max position, so rows never overlap and a batch's flat key
+# array is globally sorted (rows are batch-ordered, positions ascending)
+_ROW_STRIDE = np.int64(1) << 33
+
+
+def _row_keys(col) -> tuple[np.ndarray, np.ndarray]:
+    """A batch's per-row position lists as composite ``row * _ROW_STRIDE +
+    position`` int64 keys, plus the row of each key."""
+    vals, lens = flat_list(col)
+    rows = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+    return rows * _ROW_STRIDE + vals, rows
+
+
+def _np(rb: pa.RecordBatch, name: str, dtype=np.int64) -> np.ndarray:
+    """One scalar column of an Arrow batch as a numpy array of ``dtype``."""
+    return rb.column(name).to_numpy(zero_copy_only=False).astype(dtype)
+
+
+def _libm_idf(dfs: np.ndarray, maxdoc: int) -> np.ndarray:
+    """Double BM25 idf per df, through libm ``log`` once per unique df —
+    bit-identical to the SQL oracle's ln (numpy's vectorized log may
+    differ by 1 ulp)."""
+    uniq = np.unique(dfs)
+    idf_u = np.array(
+        [math.log(1.0 + (maxdoc - float(d) + 0.5) / (float(d) + 0.5)) for d in uniq]
+    )
+    return idf_u[np.searchsorted(uniq, dfs)]
 
 
 def _topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
@@ -204,7 +220,6 @@ class Searcher:
         index_dir: str,
         k1: float = 1.2,
         b: float = 0.75,
-        cache_tables: bool = False,
         scoring: str = "lucene",
     ):
         """``scoring``:
@@ -342,16 +357,6 @@ class Searcher:
         # CachingWrapperFilter: persisted docid-set DataFrames keyed by the
         # wrapped filter's canonical (frozen dataclass) repr
         self._filter_cache: dict[str, DataFrame] = {}
-        if cache_tables:
-            # OFF by default, and measured strictly worse on this engine:
-            # caching the postings table pays a full materialization scan of
-            # EVERY column (positions included), and InMemoryTableScan loses
-            # the Parquet footer min/max pushdown on the term-sorted files —
-            # the seek-by-term design (BlockTree analogue) lives in that
-            # pushdown. At 100 TB the postings table could never be cached
-            # anyway. Kept as an option for small hot indexes only.
-            self.postings = self.postings.cache()
-            self.termstats = self.termstats.cache()
         # the UNPRUNED postings view: cached filter sets must be built
         # against this, never against a temporarily block-pruned
         # self.postings (FilteredQuery sort-field prune / index-sort probe)
@@ -426,8 +431,6 @@ class Searcher:
         """Reference idf formula in pure double (BM25Similarity.cs:67-70
         without the final float32 cast) — glibc ``log`` on the driver, the
         same libm DuckDB calls, so oracle idf is bit-identical."""
-        import math
-
         return math.log(1.0 + (self.maxdoc - df + 0.5) / (df + 0.5))
 
     # ---------------- term statistics (Weight creation) ----------------- #
@@ -437,8 +440,6 @@ class Searcher:
         small pushdown-pruned scan, bounded by the query's term count."""
         if not terms:
             return {}
-        import math
-
         rows = self.termstats.filter(F.col("term").isin(list(set(terms)))).collect()
         out = {}
         for r in rows:
@@ -478,38 +479,26 @@ class Searcher:
             else self.field_avgdl_exact[field]
         )
         one_minus_b = 1.0 - bd
+        norm_col = "doclens" if exact else "norm_bytes"
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                docids = []
-                for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"]):
-                    d = np.asarray(deltas, dtype=np.int64)
-                    d = np.cumsum(d)
-                    docids.append(fd + d)
-                docids = np.concatenate(docids)
-                freqs = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["freqs"]])
+            for rb in batches:
+                e = decode_blocks(rb, ("freqs", norm_col))
                 if exact:
-                    dls = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-                    ).astype(np.float64)
-                    f = freqs.astype(np.float64)
+                    dls = e["doclens"].astype(np.float64)
+                    f = e["freqs"].astype(np.float64)
                     denom = f + k1d * (one_minus_b + (bd * dls) / avgdl_exact)
                     s = (w_exact * f) / denom
                     score = np.floor(s * 1e6 + 0.5)
                 else:
-                    norms = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["norm_bytes"]]
-                    )
-                    f = freqs.astype(np.float32)
-                    score = ((w * f) / (f + cache[norms & 0xFF])).astype(np.float32)
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
+                    f = e["freqs"].astype(np.float32)
+                    score = ((w * f) / (f + cache[e["norm_bytes"] & 0xFF])).astype(np.float32)
+                yield pa.RecordBatch.from_pydict(
+                    {"docid": e["docid"], "score": score.astype(np.float64)}
+                )
 
-        cols = blocks.select(
-            "first_docid", "docid_deltas", "freqs", "doclens" if exact else "norm_bytes"
-        )
-        return cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
+        cols = blocks.select("first_docid", "docid_deltas", "freqs", norm_col)
+        return cols.mapInArrow(decode, schema=_EMPTY_SCHEMA)
 
     def _decode_positions(self, blocks: DataFrame, need_norms: bool = True) -> DataFrame:
         """Posting blocks -> (docid, freq, norm_byte, positions) for
@@ -517,47 +506,40 @@ class Searcher:
         doclens array columns out of the Parquet scan entirely — a
         non-anchor slot of a phrase/span only contributes positions, and
         the scoring columns ride the anchor slot's scan."""
-        def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_doc, out_freq, out_norm, out_dl, out_pos = [], [], [], [], []
-                for fd, deltas, freqs, norms, dls, poss in zip(
-                    pdf["first_docid"], pdf["docid_deltas"], pdf["freqs"],
-                    pdf["norm_bytes"] if need_norms else pdf["freqs"],
-                    pdf["doclens"] if need_norms else pdf["freqs"],
-                    pdf["positions"],
-                ):
-                    d = fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    f = np.asarray(freqs, dtype=np.int64)
-                    out_doc.append(d)
-                    out_freq.append(f)
-                    if need_norms:
-                        out_norm.append(np.asarray(norms, dtype=np.int64))
-                        out_dl.append(np.asarray(dls, dtype=np.int64))
-                    # positions are stored flat per block; freq == per-entry
-                    # position count, so cumsum(freqs) are the split points
-                    flat = np.asarray(poss, dtype=np.int64)
-                    out_pos.extend(np.split(flat, np.cumsum(f)[:-1]))
-                res = {
-                    "docid": np.concatenate(out_doc),
-                    "freq": np.concatenate(out_freq),
-                }
-                if need_norms:
-                    res["norm_byte"] = np.concatenate(out_norm)
-                    res["doclen"] = np.concatenate(out_dl)
-                res["positions"] = out_pos
-                yield pd.DataFrame(res)
+        norm_cols = ("norm_bytes", "doclens") if need_norms else ()
 
-        if need_norms:
-            cols = blocks.select(
-                "first_docid", "docid_deltas", "freqs", "norm_bytes", "doclens", "positions"
-            )
-            schema = "docid long, freq long, norm_byte int, doclen int, positions array<int>"
-        else:
-            cols = blocks.select("first_docid", "docid_deltas", "freqs", "positions")
-            schema = "docid long, freq long, positions array<int>"
-        return cols.mapInPandas(decode, schema=schema)
+        def decode(batches):
+            for rb in batches:
+                e = decode_blocks(rb, ("freqs", "positions", *norm_cols))
+                out = {"docid": e["docid"], "freq": e["freqs"]}
+                if need_norms:
+                    out["norm_byte"] = e["norm_bytes"].astype(np.int32)
+                    out["doclen"] = e["doclens"].astype(np.int32)
+                # freq == per-entry position count: cumsum(freqs) splits
+                # the flat position stream into per-entry lists
+                pos_off = np.concatenate(([0], np.cumsum(e["freqs"])))
+                out["positions"] = list_array(pos_off, e["positions"].astype(np.int32))
+                yield pa.RecordBatch.from_pydict(out)
+
+        cols = blocks.select(
+            "first_docid", "docid_deltas", "freqs", *norm_cols, "positions"
+        )
+        schema = "docid long, freq long, " + (
+            "norm_byte int, doclen int, " if need_norms else ""
+        ) + "positions array<int>"
+        return cols.mapInArrow(decode, schema=schema)
+
+    def _docids(self, blocks: DataFrame) -> DataFrame:
+        """Posting blocks -> (docid) rows, deduplicated within each batch."""
+
+        def decode(batches):
+            for rb in batches:
+                docids = np.unique(decode_blocks(rb)["docid"])
+                yield pa.RecordBatch.from_pydict({"docid": docids})
+
+        return blocks.select("first_docid", "docid_deltas").mapInArrow(
+            decode, schema="docid long"
+        )
 
     # ---------------- per-query-type scoring ----------------------------- #
     def _empty(self) -> DataFrame:
@@ -591,21 +573,7 @@ class Searcher:
         st = stats.get(key)
         if st is None:
             return self._empty()
-        blocks = self.postings.filter(F.col("term") == key)
-
-        def decode_docs(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ds = [
-                    fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"])
-                ]
-                yield pd.DataFrame({"docid": np.concatenate(ds)})
-
-        docs = blocks.select("first_docid", "docid_deltas").mapInPandas(
-            decode_docs, schema="docid long"
-        )
+        docs = self._docids(self.postings.filter(F.col("term") == key))
         if self.scoring == "exact_int":
             # op order mirrors the SQL oracle: floor((idf*boost)*1e6 + 0.5)
             val = float(np.floor(self._idf_exact(st.df) * float(q.boost) * 1e6 + 0.5))
@@ -665,22 +633,7 @@ class Searcher:
         relative to postings), docids decoded, deduplicated."""
         terms = self._expand_terms(q)
         blocks = self.postings.join(F.broadcast(terms), "term", "left_semi")
-
-        def decode_docs(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ds = [
-                    fd + np.cumsum(np.asarray(deltas, dtype=np.int64))
-                    for fd, deltas in zip(pdf["first_docid"], pdf["docid_deltas"])
-                ]
-                yield pd.DataFrame({"docid": np.unique(np.concatenate(ds))})
-
-        docs = (
-            blocks.select("first_docid", "docid_deltas")
-            .mapInPandas(decode_docs, schema="docid long")
-            .distinct()
-        )
+        docs = self._docids(blocks).distinct()
         boost = float(np.float32(getattr(q, "boost", 1.0))) * self.const_score
         return docs.withColumn("score", F.lit(boost).cast("double"))
 
@@ -772,28 +725,16 @@ class Searcher:
             a deterministic convention; the reference's own PhraseQueue
             enumeration is likewise order-dependent and approximate (see
             the SloppyPhraseScorer.cs PhraseFreq doc comment)."""
-            M = np.int64(1) << 33  # > 2*max position; rows separated safely
             BIG = np.int64(1) << 40  # poison distance; masked by `match`
 
-            def flat_keys(col):
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                base_keys, base_rows = flat_keys(pdf["pos_0"])
+            for rb in batches:
+                n_rows = rb.num_rows
+                base_keys, base_rows = _row_keys(rb.column("pos_0"))
                 match = np.ones(len(base_keys), dtype=bool)
                 maxc = np.zeros(len(base_keys), dtype=np.int64)
                 minc = np.zeros(len(base_keys), dtype=np.int64)
                 for i in range(1, nterms):
-                    keys_i, _ = flat_keys(pdf[f"pos_{i}"])
+                    keys_i, _ = _row_keys(rb.column(f"pos_{i}"))
                     if slop == 0:
                         cand = base_keys + i
                         idx = np.searchsorted(keys_i, cand)
@@ -825,11 +766,11 @@ class Searcher:
                 if slop > 0:
                     matchlen = maxc - minc
                     match &= matchlen <= slop
-                counts = np.bincount(base_rows[match], minlength=len(pdf)).astype(np.int64)
+                counts = np.bincount(base_rows[match], minlength=n_rows).astype(np.int64)
                 hit = counts > 0
                 if not hit.any():
                     continue
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
+                docids = _np(rb, "docid")[hit]
                 if slop == 0:
                     # exact phrase: slop factor 1 per match, freq = count
                     fd = counts[hit].astype(np.float64)
@@ -845,29 +786,29 @@ class Searcher:
                     if exact:
                         sf_int = np.floor(1e6 / (1.0 + m_m) + 0.5)
                         fd = (
-                            np.bincount(rows_m, weights=sf_int, minlength=len(pdf))[hit]
+                            np.bincount(rows_m, weights=sf_int, minlength=n_rows)[hit]
                             / 1e6
                         )
                         f64 = None
                     else:
                         f64 = np.bincount(
-                            rows_m, weights=1.0 / (1.0 + m_m), minlength=len(pdf)
+                            rows_m, weights=1.0 / (1.0 + m_m), minlength=n_rows
                         )[hit]
                 if exact:
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
+                    dl = _np(rb, "doclen", np.float64)[hit]
                     denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
                     score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
                 else:
                     f32 = f64.astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
+                    nb = _np(rb, "norm_byte")[hit] & 0xFF
                     score = (boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)).astype(
                         np.float32
                     )
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {"docid": docids, "score": score.astype(np.float64)}
                 )
 
-        return joined.mapInPandas(phrase_score, schema=_EMPTY_SCHEMA)
+        return joined.mapInArrow(phrase_score, schema=_EMPTY_SCHEMA)
 
     def _score_multiphrase(self, q: MultiPhraseQuery, stats: dict[str, TermStat]) -> DataFrame:
         """MultiPhraseQuery (MultiPhraseQuery.cs:72): per slot, the position
@@ -1133,37 +1074,26 @@ class Searcher:
         slop64 = np.int64(slop)
 
         def span_score(batches):
-            M = np.int64(1) << 33
+            M = _ROW_STRIDE
 
-            def flat_keys(col):
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
-
-            def flat_spans(pdf, i):
+            def flat_spans(rb, i):
                 """Clause i as parallel (start_key, end_key, rows)."""
                 if kinds[i] == "unit":
-                    keys, rows = flat_keys(pdf[f"pos_{i}"])
+                    keys, rows = _row_keys(rb.column(f"pos_{i}"))
                     return keys, keys + 1, rows
-                s_keys, rows = flat_keys(pdf[f"start_{i}"])
-                e_keys, _ = flat_keys(pdf[f"end_{i}"])
+                s_keys, rows = _row_keys(rb.column(f"start_{i}"))
+                e_keys, _ = _row_keys(rb.column(f"end_{i}"))
                 return s_keys, e_keys, rows
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                base_keys, end0_keys, base_rows = flat_spans(pdf, 0)
+            for rb in batches:
+                n_rows = rb.num_rows
+                base_keys, end0_keys, base_rows = flat_spans(rb, 0)
                 match = np.ones(len(base_keys), dtype=bool)
                 if in_order:
                     cur_end = end0_keys.copy()
                     sum_len = end0_keys - base_keys
                     for i in range(1, nterms):
-                        s_i, e_i, _ = flat_spans(pdf, i)
+                        s_i, e_i, _ = flat_spans(rb, i)
                         idx = np.searchsorted(s_i, cur_end, "left")
                         match &= idx < len(s_i)
                         if not len(s_i):
@@ -1199,7 +1129,7 @@ class Searcher:
                     e_max = end0_keys.copy()
                     total = end0_keys - base_keys
                     for i in range(1, nterms):
-                        s_i, e_i, _ = flat_spans(pdf, i)
+                        s_i, e_i, _ = flat_spans(rb, i)
                         n_i = len(s_i)
                         if n_i == 0:
                             match[:] = False
@@ -1238,26 +1168,25 @@ class Searcher:
                         | (e_pos[1:] != e_pos[:-1])
                     )
                     m_rows, s_pos, e_pos = m_rows[keep], s_pos[keep], e_pos[keep]
-                    cnts = np.bincount(m_rows, minlength=len(pdf))
+                    cnts = np.bincount(m_rows, minlength=n_rows)
                     hit = cnts > 0
-                    cuts = np.cumsum(cnts)[:-1]
-                    starts_l = np.split(s_pos, cuts)
-                    ends_l = np.split(e_pos, cuts)
-                    yield pd.DataFrame(
+                    # rows are sorted, so hit rows' spans are contiguous runs
+                    off = np.concatenate(([0], np.cumsum(cnts[hit])))
+                    yield pa.RecordBatch.from_pydict(
                         {
-                            "docid": pdf["docid"].to_numpy(np.int64)[hit],
-                            "starts": [a for a, h in zip(starts_l, hit) if h],
-                            "ends": [a for a, h in zip(ends_l, hit) if h],
-                            "norm_byte": pdf["norm_byte"].to_numpy(np.int64)[hit],
-                            "doclen": pdf["doclen"].to_numpy(np.int64)[hit],
+                            "docid": _np(rb, "docid")[hit],
+                            "starts": list_array(off, s_pos),
+                            "ends": list_array(off, e_pos),
+                            "norm_byte": _np(rb, "norm_byte")[hit],
+                            "doclen": _np(rb, "doclen")[hit],
                         }
                     )
                     continue
-                counts = np.bincount(base_rows[match], minlength=len(pdf)).astype(np.int64)
+                counts = np.bincount(base_rows[match], minlength=n_rows).astype(np.int64)
                 hit = counts > 0
                 if not hit.any():
                     continue
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
+                docids = _np(rb, "docid")[hit]
                 # SpanScorer.cs SetFreqCurrentDoc: freq += sloppyFreq(
                 # matchLength) per enumerated span, sloppyFreq = 1/(1+d)
                 # (BM25Similarity.cs:74). exact mode sums integer micro-unit
@@ -1268,26 +1197,26 @@ class Searcher:
                 if exact:
                     sf_int = np.floor(1e6 / (1.0 + m_m) + 0.5)
                     fd = (
-                        np.bincount(rows_m, weights=sf_int, minlength=len(pdf))[hit]
+                        np.bincount(rows_m, weights=sf_int, minlength=n_rows)[hit]
                         / 1e6
                     )
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
+                    dl = _np(rb, "doclen", np.float64)[hit]
                     denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
                     score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
                 else:
                     f64 = np.bincount(
-                        rows_m, weights=1.0 / (1.0 + m_m), minlength=len(pdf)
+                        rows_m, weights=1.0 / (1.0 + m_m), minlength=n_rows
                     )[hit]
                     f32 = f64.astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
+                    nb = _np(rb, "norm_byte")[hit] & 0xFF
                     score = (
                         boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
                     ).astype(np.float32)
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {"docid": docids, "score": score.astype(np.float64)}
                 )
 
-        return joined.mapInPandas(
+        return joined.mapInArrow(
             span_score, schema=_SPANS_SCHEMA if emit_spans else _EMPTY_SCHEMA
         )
 
@@ -1323,19 +1252,11 @@ class Searcher:
         end = int(q.end)
 
         def first_score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                col = pdf["positions"]
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
+            for rb in batches:
+                vals, lens = flat_list(rb.column("positions"))
+                rows = np.repeat(np.arange(rb.num_rows, dtype=np.int64), lens)
                 mask = vals < end
-                freqs = np.bincount(rows[mask], minlength=len(pdf)).astype(np.int64)
+                freqs = np.bincount(rows[mask], minlength=rb.num_rows).astype(np.int64)
                 hit = freqs > 0
                 if not hit.any():
                     continue
@@ -1343,23 +1264,23 @@ class Searcher:
                 # SpanScorer's sloppyFreq contributes 1/(1+1) per match
                 # (exact halves: no float drift)
                 f = freqs[hit]
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
+                docids = _np(rb, "docid")[hit]
                 if exact:
                     fd = f.astype(np.float64) * 0.5
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
+                    dl = _np(rb, "doclen", np.float64)[hit]
                     denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
                     score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
                 else:
                     f32 = (f.astype(np.float64) * 0.5).astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
+                    nb = _np(rb, "norm_byte")[hit] & 0xFF
                     score = (
                         boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
                     ).astype(np.float32)
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {"docid": docids, "score": score.astype(np.float64)}
                 )
 
-        return joined.mapInPandas(first_score, schema=_EMPTY_SCHEMA)
+        return joined.mapInArrow(first_score, schema=_EMPTY_SCHEMA)
 
     def _score_span_not(self, q: SpanNotQuery, stats: dict[str, TermStat]) -> DataFrame:
         """SpanNotQuery.cs:38-61: include-term positions with no exclude
@@ -1399,51 +1320,37 @@ class Searcher:
         pre, post = np.int64(q.pre), np.int64(q.post)
 
         def not_score(batches):
-            M = np.int64(1) << 33
-
-            def flat_keys(col):
-                col = col.map(lambda v: v if v is not None else [])
-                lens = col.map(len).to_numpy(np.int64)
-                vals = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-                    if lens.sum()
-                    else np.array([], dtype=np.int64)
-                )
-                rows = np.repeat(np.arange(len(col), dtype=np.int64), lens)
-                return rows * M + vals, rows
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                inc_keys, inc_rows = flat_keys(pdf["pos_inc"])
-                exc_keys, _ = flat_keys(pdf["pos_exc"])
+            for rb in batches:
+                # a doc without the exclude term has a null pos_exc: no keys
+                inc_keys, inc_rows = _row_keys(rb.column("pos_inc"))
+                exc_keys, _ = _row_keys(rb.column("pos_exc"))
                 lo = np.searchsorted(exc_keys, inc_keys - pre, "left")
                 hi = np.searchsorted(exc_keys, inc_keys + post, "right")
                 survive = hi == lo  # no exclude span overlaps the window
-                freqs = np.bincount(inc_rows[survive], minlength=len(pdf)).astype(np.int64)
+                freqs = np.bincount(inc_rows[survive], minlength=rb.num_rows).astype(np.int64)
                 hit = freqs > 0
                 if not hit.any():
                     continue
                 # surviving unit spans contribute sloppyFreq(1) = 1/2 each
                 # (SpanScorer.cs SetFreqCurrentDoc; exact halves)
                 f = freqs[hit]
-                docids = pdf["docid"].to_numpy(np.int64)[hit]
+                docids = _np(rb, "docid")[hit]
                 if exact:
                     fd = f.astype(np.float64) * 0.5
-                    dl = pdf["doclen"].to_numpy(np.float64)[hit]
+                    dl = _np(rb, "doclen", np.float64)[hit]
                     denom = fd + k1d * (one_minus_b + (bd * dl) / avgdl_exact)
                     score = np.floor((w_exact * fd) / denom * 1e6 + 0.5)
                 else:
                     f32 = (f.astype(np.float64) * 0.5).astype(np.float32)
-                    nb = pdf["norm_byte"].to_numpy(np.int64)[hit] & 0xFF
+                    nb = _np(rb, "norm_byte")[hit] & 0xFF
                     score = (
                         boost * ((w * f32) / (f32 + cache[nb])).astype(np.float32)
                     ).astype(np.float32)
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {"docid": docids, "score": score.astype(np.float64)}
                 )
 
-        return joined.mapInPandas(not_score, schema=_EMPTY_SCHEMA)
+        return joined.mapInArrow(not_score, schema=_EMPTY_SCHEMA)
 
     def _docid_bounds_for_filter(self, f: Query) -> tuple | None:
         """For a NumericRangeQuery on the index's sort field, the docid
@@ -1533,8 +1440,6 @@ class Searcher:
         expansion at q.max_expansions terms first (fuzzy: fewest edits
         first — the reference's closest-boost-first; ties by df desc then
         term asc), which bounds the scan for huge expansions."""
-        import math
-
         terms = self._expand_terms(q)
         ts = self.termstats.join(F.broadcast(terms), "term", "left_semi").select("term", "df")
         if getattr(q, "rewrite_method", "") == "top_terms_scoring":
@@ -1565,39 +1470,16 @@ class Searcher:
         one_minus_b = 1.0 - bd
         cache = self.cache if fld == "text" else self.field_cache[fld]
         qboost = float(getattr(q, "boost", 1.0))
+        norm_col = "doclens" if exact else "norm_bytes"
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                row_lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-                        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                )
-                freqs = np.concatenate(
-                    [np.asarray(x, dtype=np.int64) for x in pdf["freqs"]]
-                )
-                dfs = pdf["df"].to_numpy(np.int64)
-                # idf per UNIQUE df via libm log (bit-identical to the SQL
-                # oracle's ln; numpy's vectorized log may differ by 1 ulp)
-                uniq = np.unique(dfs)
-                idf_u = np.array(
-                    [
-                        math.log(1.0 + (maxdoc - float(d) + 0.5) / (float(d) + 0.5))
-                        for d in uniq
-                    ]
-                )
-                idf_blk = idf_u[np.searchsorted(uniq, dfs)]
-                idf_e = np.repeat(idf_blk, row_lens)
+            for rb in batches:
+                e = decode_blocks(rb, ("freqs", norm_col))
+                idf_e = _libm_idf(_np(rb, "df"), maxdoc)[e["row"]]
                 if exact:
                     w = idf_e * (k1d + 1.0) * qboost
-                    dls = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["doclens"]]
-                    ).astype(np.float64)
-                    f = freqs.astype(np.float64)
+                    dls = e["doclens"].astype(np.float64)
+                    f = e["freqs"].astype(np.float64)
                     denom = f + k1d * (one_minus_b + (bd * dls) / avgdl_exact)
                     score = np.floor((w * f) / denom * 1e6 + 0.5)
                 else:
@@ -1606,18 +1488,14 @@ class Searcher:
                         * (k1f + np.float32(1.0))
                         * np.float32(qboost)
                     )
-                    norms = np.concatenate(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["norm_bytes"]]
-                    )
-                    f = freqs.astype(np.float32)
-                    score = ((w * f) / (f + cache[norms & 0xFF])).astype(np.float32)
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
+                    f = e["freqs"].astype(np.float32)
+                    score = ((w * f) / (f + cache[e["norm_bytes"] & 0xFF])).astype(np.float32)
+                yield pa.RecordBatch.from_pydict(
+                    {"docid": e["docid"], "score": score.astype(np.float64)}
+                )
 
-        cols = blocks.select(
-            "first_docid", "docid_deltas", "freqs", "df",
-            "doclens" if exact else "norm_bytes",
-        )
-        scored = cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
+        cols = blocks.select("first_docid", "docid_deltas", "freqs", "df", norm_col)
+        scored = cols.mapInArrow(decode, schema=_EMPTY_SCHEMA)
         return scored.groupBy("docid").agg(F.sum("score").alias("score"))
 
     def _scored_rewrite_keyword(self, blocks: DataFrame, q: Query, exact: bool) -> DataFrame:
@@ -1626,42 +1504,25 @@ class Searcher:
         so each expanded-term match scores boost*idf — NOT the text-field
         BM25 kernel with doclen norms. Disjunction-sums per doc, so a
         multi-valued doc matching several expanded terms adds their idfs."""
-        import math
-
         maxdoc = self.maxdoc
         qboost = float(getattr(q, "boost", 1.0))
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                row_lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(d, dtype=np.int64))
-                        for fd, d in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                )
-                dfs = pdf["df"].to_numpy(np.int64)
-                uniq = np.unique(dfs)
-                idf_u = np.array(
-                    [
-                        math.log(1.0 + (maxdoc - float(d) + 0.5) / (float(d) + 0.5))
-                        for d in uniq
-                    ]
-                )
-                idf_blk = idf_u[np.searchsorted(uniq, dfs)]
-                idf_e = np.repeat(idf_blk, row_lens)
+            for rb in batches:
+                e = decode_blocks(rb)
+                idf_e = _libm_idf(_np(rb, "df"), maxdoc)[e["row"]]
                 if exact:
                     score = np.floor(idf_e * qboost * 1e6 + 0.5)
                 else:
                     score = (idf_e.astype(np.float32) * np.float32(qboost)).astype(
                         np.float32
                     )
-                yield pd.DataFrame({"docid": docids, "score": score.astype(np.float64)})
+                yield pa.RecordBatch.from_pydict(
+                    {"docid": e["docid"], "score": score.astype(np.float64)}
+                )
 
         cols = blocks.select("first_docid", "docid_deltas", "df")
-        scored = cols.mapInPandas(decode, schema=_EMPTY_SCHEMA)
+        scored = cols.mapInArrow(decode, schema=_EMPTY_SCHEMA)
         return scored.groupBy("docid").agg(F.sum("score").alias("score"))
 
     # ---------------- boolean composition -------------------------------- #
@@ -1956,8 +1817,9 @@ class Searcher:
           (the reference itself calls it "not relevant to ranking",
           TFIDFSimilarity.cs queryNorm doc) — the documented divergence.
         - ``"lm_dirichlet"`` — LMDirichletSimilarity.cs:48: per matched
-          term ``ln(1 + tf/(mu*p)) + ln(mu/(dl+mu))`` with collection
-          model ``p = ttf/sum_ttf`` (mu default 2000, as the reference).
+          term ``max(ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)), 0)`` with
+          collection model ``p = ttf/sum_ttf`` (mu default 2000, as the
+          reference).
         - ``"lm_jelinek_mercer"`` — LMJelinekMercerSimilarity.cs:40: per
           matched term ``ln(1 + ((1-lambda)*tf/dl) / (lambda*p))``,
           lambda = ``jm_lambda`` (default 0.7, the reference's
@@ -1977,8 +1839,6 @@ class Searcher:
         cross-engine comparison is integer arithmetic; classic's coord is
         applied as ``(sum * matched) DIV |q|`` — a rational floor both
         engines compute identically."""
-        import math
-
         if similarity not in (
             "classic", "lm_dirichlet", "lm_jelinek_mercer", "dfr_ine_b2",
             "ib_ll_d2",
@@ -2002,7 +1862,9 @@ class Searcher:
                 mup = mu * (st.ttf / float(self.sum_ttf))
 
                 def score_fn(tf, dl, mup=mup, mu=mu):
-                    return np.log(1.0 + tf / mup) + np.log(mu / (dl + mu))
+                    # per-term clamp at 0, as LMDirichletSimilarity.cs:77
+                    s = np.log(1.0 + tf / mup) + np.log(mu / (dl + mu))
+                    return np.maximum(s, 0.0)
             elif similarity == "lm_jelinek_mercer":
                 lp = jm_lambda * (st.ttf / float(self.sum_ttf))
 
@@ -2029,20 +1891,20 @@ class Searcher:
                     return (tfn * bw) * (gnum / (gdf * (tfn + 1.0)))
 
             def decode(batches, score_fn=score_fn):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    docids, tf, dl = _decode_tf_dl(pdf)
-                    s = score_fn(tf, dl)
-                    yield pd.DataFrame({
-                        "docid": docids,
+                for rb in batches:
+                    e = decode_blocks(rb, ("freqs", "doclens"))
+                    s = score_fn(
+                        e["freqs"].astype(np.float64), e["doclens"].astype(np.float64)
+                    )
+                    yield pa.RecordBatch.from_pydict({
+                        "docid": e["docid"],
                         "s": np.floor(s * 1e6 + 0.5).astype(np.int64),
                     })
 
             parts.append(
                 blocks.select(
                     "first_docid", "docid_deltas", "freqs", "doclens"
-                ).mapInPandas(decode, schema="docid long, s long")
+                ).mapInArrow(decode, schema="docid long, s long")
             )
         if not parts:
             return self.spark.createDataFrame(
@@ -2532,24 +2394,24 @@ class Searcher:
             st = stats.get(key)
             if st is None:
                 return {"value": 0.0, "description": f"term({key!r}): no match", "details": []}
-            row = (
+            blocks = (
                 self.postings.filter(
                     (F.col("term") == key)
                     & (F.col("first_docid") <= docid)
                     & (F.col("last_docid") >= docid)
                 )
                 .select("first_docid", "docid_deltas", "freqs", "norm_bytes", "doclens")
-                .collect()
+                .toArrow()
             )
             tf = norm_byte = doclen = None
-            for r in row:
-                d = r["first_docid"] + np.cumsum(np.asarray(r["docid_deltas"], dtype=np.int64))
-                hit = np.flatnonzero(d == docid)
+            for rb in blocks.to_batches():
+                e = decode_blocks(rb, ("freqs", "norm_bytes", "doclens"))
+                hit = np.flatnonzero(e["docid"] == docid)
                 if len(hit):
                     i = int(hit[0])
-                    tf = int(r["freqs"][i])
-                    norm_byte = int(r["norm_bytes"][i])
-                    doclen = int(r["doclens"][i])
+                    tf = int(e["freqs"][i])
+                    norm_byte = int(e["norm_bytes"][i])
+                    doclen = int(e["doclens"][i])
                     break
             if tf is None:
                 return {"value": 0.0, "description": f"term({key!r}): no match", "details": []}
@@ -2682,24 +2544,13 @@ class Searcher:
         )
 
         def decode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lens = pdf["docid_deltas"].map(len).to_numpy(np.int64)
-                docids = np.concatenate(
-                    [
-                        fd + np.cumsum(np.asarray(x, dtype=np.int64))
-                        for fd, x in zip(pdf["first_docid"], pdf["docid_deltas"])
-                    ]
-                ) if lens.sum() else np.array([], dtype=np.int64)
-                yield pd.DataFrame(
-                    {
-                        "term": np.repeat(pdf["term"].to_numpy(), lens),
-                        "docid": docids,
-                    }
+            for rb in batches:
+                e = decode_blocks(rb)
+                yield pa.RecordBatch.from_pydict(
+                    {"term": rb.column("term").take(e["row"]), "docid": e["docid"]}
                 )
 
-        pairs = cand_docs.mapInPandas(decode, schema="term string, docid long")
+        pairs = cand_docs.mapInArrow(decode, schema="term string, docid long")
         return (
             pairs.join(ctx, "docid", "left_semi")
             .groupBy("term")

@@ -75,6 +75,8 @@ def test_compaction_applies_deletes_and_restores_stats(spark, idx):
     delete_docs(spark, out, victims)
     summary = compact_index(spark, out, CFG)
     assert summary["deletes_applied"] == 20
+    ran = [m for m in summary["stages"].values() if not m.get("skipped")]
+    assert ran and all("wall_sec" in m for m in ran), summary["stages"]
     s = Searcher(spark, out)
     # tombstones gone, physically removed, stats refreshed
     assert s.tombstones is None

@@ -80,7 +80,7 @@ def _lm_expected(terms, mu=2000.0):
                 continue
             ttf = sum(x.count(t) for x in toks)
             p = ttf / float(total)
-            s = math.log(1.0 + tf / (mu * p)) + math.log(mu / (dl + mu))
+            s = max(math.log(1.0 + tf / (mu * p)) + math.log(mu / (dl + mu)), 0.0)
             ssum += int(math.floor(s * 1e6 + 0.5))
             matched += 1
         if matched:
@@ -104,6 +104,18 @@ def test_lm_dirichlet_matches_numpy(searcher):
         for r in searcher.similarity_score_df(terms, "lm_dirichlet").collect()
     }
     assert got == _lm_expected(terms)
+
+
+def test_lm_dirichlet_clamps_common_term_in_long_doc(searcher):
+    # "table" is common (7 of 29 tokens) and doc 2 is long for one hit
+    # (tf 1, dl 5): ln(1 + tf/(mu*p)) + ln(mu/(dl+mu)) < 0 there, and
+    # LMDirichletSimilarity.cs:77 clamps the per-term score to 0
+    got = {
+        int(r["docid"]): int(r["score"])
+        for r in searcher.similarity_score_df(["table"], "lm_dirichlet").collect()
+    }
+    assert got[2] == 0
+    assert got == _lm_expected(["table"])
 
 
 def _jm_expected(terms, lam=0.7):
